@@ -127,16 +127,25 @@ object GraftFunctions {
     // ments pass too. A plan that isn't such a chain either already
     // has cluster-wide parallelism downstream of its shuffle or isn't
     // a scan heal candidate at all, so skipping it loses nothing.
+    if (narrowChain(df.queryExecution.optimizedPlan) &&
+        df.rdd.getNumPartitions < p) df.repartition(p) else df
+  }
+
+  /** True for a scan/filter/project/generate chain that holds no
+    * subquery: the only plans [[scaleScan]] may probe through
+    * `Dataset.rdd` without executing anything. A subquery in any node's
+    * expressions (ScalarSubquery, InSubquery, Exists) would run eagerly
+    * while the probe prepares the physical plan. */
+  private[graft] def narrowChain(l: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Boolean = {
+    import org.apache.spark.sql.catalyst.expressions.PlanExpression
     import org.apache.spark.sql.catalyst.plans.logical._
-    def narrowChain(l: LogicalPlan): Boolean = l match {
+    !l.expressions.exists(_.exists(_.isInstanceOf[PlanExpression[_]])) && (l match {
       case _: LeafNode => true
       case r: Repartition if !r.shuffle => narrowChain(r.child) // coalesce
       case n @ (_: Project | _: Filter | _: SubqueryAlias | _: Generate) =>
         n.children.forall(narrowChain)
       case _ => false
-    }
-    if (narrowChain(df.queryExecution.optimizedPlan) &&
-        df.rdd.getNumPartitions < p) df.repartition(p) else df
+    })
   }
 
   /**

@@ -451,11 +451,7 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
     * on-disk index present, its derived rows to that index — ingest
     * stays incremental, indexes never rebuild on append. */
   private def appendBatch(batch0: DataFrame): Unit = withWriterLock {
-    // Cluster store files by doc_id: parquet keeps per-row-group
-    // min/max stats, so a doc_id predicate (documentChunks, targeted
-    // deletes) skips whole row groups of a sorted file. At 100 TB this
-    // is the poor-man's z-order — free at write time, no layout change.
-    val batch = batch0.sortWithinPartitions(col("source"), col("doc_id"))
+    val batch = bySource(batch0)
     val indexDirExists = hadoopFs(indexPath)
       .exists(new org.apache.hadoop.fs.Path(indexPath))
     if (indexDirExists || hasIvfIndex || hasGridIndex || hasPqIndex || hasIvfPqIndex) {
@@ -519,12 +515,23 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
         textStats(col("chunk_text")).getField("n_tokens").as("n_tokens"))
     if (!deferEmbedding) appendBatch(indexColumns(base))
     else withWriterLock {
-      storeTree.appendCommitted(
-        pendingRows(base).sortWithinPartitions(col("source"), col("doc_id")), 0L)
+      storeTree.appendCommitted(bySource(pendingRows(base)), 0L)
       invalidateIndexes()
       touchMeta()
     }
   }
+
+  /** Store rows clustered for a commit — every store write goes
+    * through here. Rows of one source meet in one write task (Spark's
+    * rebalance hint: AQE coalesces small partitions and splits a large
+    * source into files of advisory size), so a commit adds one file per
+    * touched source at serving scale instead of one per (task x
+    * source). Within a file rows sort by (source, doc_id): parquet
+    * keeps per-row-group min/max stats, so a doc_id predicate
+    * (documentChunks, targeted deletes) skips whole row groups. */
+  private def bySource(rows: DataFrame): DataFrame =
+    rows.hint("rebalance", col("source"))
+      .sortWithinPartitions(col("source"), col("doc_id"))
 
   /** A chunk batch as PENDING store rows: identical store schema, with
     * every embedding-derived column a TYPED null (types taken from the
@@ -598,8 +605,15 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
 
   /** Embed query text with the library's doc/query-symmetric embedder. */
   private[graft] def queryFrame(queryText: String): DataFrame =
-    spark.range(1).select(
-      embed.embed(lit(queryText), "search_query").as("qvec"))
+    queryRow(embed.embed(lit(queryText), "search_query"))
+
+  /** A one-row query frame over a LOCAL relation: the optimizer folds
+    * the projection into the relation, so the single-query operators
+    * resolve `qvec` on the driver (VectorSearch.bindQuery) without a
+    * Spark job — an expression-backed embedder never leaves the driver. */
+  private def queryRow(qvec: Column): DataFrame =
+    spark.createDataFrame(java.util.List.of(org.apache.spark.sql.Row.empty),
+      new org.apache.spark.sql.types.StructType()).select(qvec.as("qvec"))
 
   /**
    * k-NN search by query text (the reference's POST /search), routed
@@ -769,8 +783,7 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
     if (qvec.length != dim)
       throw new IllegalArgumentException(
         s"query dimension ${qvec.length} does not match library dimension $dim")
-    dispatch(spark.range(1).select(
-      typedLit(qvec).cast("array<float>").as("qvec")), clampK(k), metric, filter)
+    dispatch(queryRow(typedLit(qvec).cast("array<float>")), clampK(k), metric, filter)
   }
 
   /**
@@ -3183,9 +3196,7 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
           // state) instead of failing the stream; rebuildIndex() is
           // the existing catch-up that embeds pending rows in bulk.
           embedOrPending(b, batchId).fold {
-            storeTree.appendCommitted(
-              pendingRows(b.drop("chunk_id"))
-                .sortWithinPartitions(col("source"), col("doc_id")), 0L)
+            storeTree.appendCommitted(bySource(pendingRows(b.drop("chunk_id"))), 0L)
           } { eb =>
             try storeTree.appendCommitted(eb, 0L) finally eb.unpersist()
           }
@@ -3222,7 +3233,7 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
       }
     if (!up) { embedded.unpersist(); None }
     else try {
-      val full = derivedIndexColumns(embedded).persist()
+      val full = bySource(derivedIndexColumns(embedded)).persist()
       full.count()
       Some(full)
     } finally embedded.unpersist()
@@ -3313,9 +3324,7 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
           // batch pending — joining NO index — instead of killing the
           // stream; rebuildIndex() embeds and indexes it later
           embedOrPending(b0, batchId).fold {
-            storeTree.appendCommitted(
-              pendingRows(b0.drop("chunk_id"))
-                .sortWithinPartitions(col("source"), col("doc_id")), 0L)
+            storeTree.appendCommitted(bySource(pendingRows(b0.drop("chunk_id"))), 0L)
             invalidateIndexes()
           } { b =>
             try {
@@ -3373,8 +3382,7 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
     * but changes none of them. */
   private def swapStore(newData: DataFrame, reindex: Boolean = true): Unit = {
     installRebuild(storeTree) { (tmp, _) =>
-      newData.sortWithinPartitions(col("source"), col("doc_id"))
-        .write.mode(SaveMode.Overwrite).partitionBy("source").parquet(tmp)
+      bySource(newData).write.mode(SaveMode.Overwrite).partitionBy("source").parquet(tmp)
     }
     invalidateIndexes()
     // The partitioned index is derived data: when the rewrite can
@@ -3431,11 +3439,14 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
    * Compact the store (the maintenance half of the reference's
    * background reindex loop, adapted to a lake layout): streaming
    * ingest appends one small parquet file per micro-batch per source;
-   * compaction rewrites them into `numPartitions` files clustered by
-   * source, restoring scan efficiency without touching row content.
+   * compaction rewrites each source into one file (several of advisory
+   * size for a large source — the store commit's clustering),
+   * restoring scan efficiency without touching row content.
+   * `numPartitions` no longer shapes the layout and is ignored; it
+   * stays for source compatibility.
    */
   def compact(numPartitions: Int = 1): Unit = withWriterLock {
-    swapStore(chunks.repartition(numPartitions, col("source")), reindex = false)
+    swapStore(chunks, reindex = false)
   }
 
   /**

@@ -48,25 +48,21 @@ object IvfIndex {
       (i, d)
     }.sortBy(_._2).take(nProbe).map(_._1)
 
-  private def rerank(candidates: DataFrame, query: DataFrame, idCol: String,
-                     vecCol: String, k: Int, metric: String): DataFrame =
-    candidates.crossJoin(broadcast(query))
-      .select(col(idCol),
-        round(VectorSearch.similarity(metric, col(vecCol), col("qvec")), 6).as("score"))
-      .orderBy(col("score").desc, col(idCol).asc)
-      .limit(k)
+  /** Exact re-rank of the cells nearest to the query among `centers`. */
+  private def probeCells(assigned: DataFrame, centers: Seq[(Int, Array[Double])],
+                         query: DataFrame, idCol: String, vecCol: String, k: Int,
+                         nProbe: Int, metric: String): DataFrame =
+    VectorSearch.withQuery(assigned, query, idCol) { q =>
+      val probe = nearestClusters(centers, q.vec, nProbe)
+      VectorSearch.rerank(assigned.filter(col("cluster").isin(probe: _*)),
+        q.qvec, idCol, vecCol, k, metric)
+    }
 
   /** Exact re-rank within the nProbe nearest cells to the query. */
   def search(assigned: DataFrame, model: KMeansModel, query: DataFrame,
              idCol: String, vecCol: String, k: Int, nProbe: Int = 4,
-             metric: String = "cosine"): DataFrame = {
-    val qv = query.select(col("qvec")).head.getSeq[Float](0).map(_.toDouble).toArray
-    val probe = nearestClusters(
-      model.clusterCenters.zipWithIndex.map { case (c, i) => (i, c.toArray) }.toSeq,
-      qv, nProbe)
-    rerank(assigned.filter(col("cluster").isin(probe: _*)),
-      query, idCol, vecCol, k, metric)
-  }
+             metric: String = "cosine"): DataFrame =
+    probeCells(assigned, centersOf(model), query, idCol, vecCol, k, nProbe, metric)
 
   /**
    * Exact-arithmetic assignment to given centroids: argmin of the
@@ -97,12 +93,8 @@ object IvfIndex {
     * driver-side against the same centroid values, exact re-rank. */
   def searchAssigned(assigned: DataFrame, centers: Seq[(Int, Array[Double])],
                      query: DataFrame, idCol: String, vecCol: String, k: Int,
-                     nProbe: Int = 4, metric: String = "cosine"): DataFrame = {
-    val qv = query.select(col("qvec")).head.getSeq[Float](0).map(_.toDouble).toArray
-    val probe = nearestClusters(centers, qv, nProbe)
-    rerank(assigned.filter(col("cluster").isin(probe: _*)),
-      query, idCol, vecCol, k, metric)
-  }
+                     nProbe: Int = 4, metric: String = "cosine"): DataFrame =
+    probeCells(assigned, centers, query, idCol, vecCol, k, nProbe, metric)
 
   /**
    * Persist the index in its on-disk serving layout: the assignment
@@ -221,15 +213,12 @@ object IvfIndex {
                     rowFilter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
     val centers = spark.read.parquet(s"$path/centroids").collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1).toArray)).toSeq
-    val qv = query.select(col("qvec")).head.getSeq[Float](0).map(_.toDouble).toArray
-    val probe = nearestClusters(centers, qv, nProbe)
     // rowFilter applies INSIDE the cluster-pruned scan (partition
     // pruning x pushed row-group predicate), never post-hoc on the
     // shortlist — k survivors all satisfy it.
-    val pruned = spark.read.parquet(s"$path/assigned")
-      .filter(col("cluster").isin(probe: _*))
-    rerank(rowFilter.fold(pruned)(pruned.where),
-      query, idCol, vecCol, k, metric)
+    val assigned = spark.read.parquet(s"$path/assigned")
+    probeCells(rowFilter.fold(assigned)(assigned.where), centers, query,
+      idCol, vecCol, k, nProbe, metric)
   }
 
   /**
@@ -433,17 +422,12 @@ object IvfIndex {
   def searchSpillAssigned(assigned: DataFrame, centers: Seq[(Int, Array[Double])],
                           query: DataFrame, idCol: String, vecCol: String,
                           k: Int, nProbe: Int = 1,
-                          metric: String = "cosine"): DataFrame = {
-    val qv = query.select(col("qvec")).head.getSeq[Float](0).map(_.toDouble).toArray
-    val probe = nearestClusters(centers, qv, nProbe)
-    assigned.filter(col("cluster").isin(probe: _*))
-      .crossJoin(broadcast(query))
-      .select(col(idCol),
-        round(VectorSearch.similarity(metric, col(vecCol), col("qvec")), 6).as("score"))
-      .groupBy(col(idCol)).agg(max(col("score")).as("score"))
-      .orderBy(col("score").desc, col(idCol).asc)
-      .limit(k)
-  }
+                          metric: String = "cosine"): DataFrame =
+    VectorSearch.withQuery(assigned, query, idCol) { q =>
+      VectorSearch.dedupTopK(
+        assigned.filter(col("cluster").isin(nearestClusters(centers, q.vec, nProbe): _*))
+          .select(col(idCol), VectorSearch.scoreCol(metric, vecCol, q.qvec)), idCol, k)
+    }
 
   /** One-call convenience: build + probe (the `ivf_knn` query). */
   def ivfKnn(emb: DataFrame, query: DataFrame, idCol: String, vecCol: String,

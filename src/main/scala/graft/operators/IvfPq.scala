@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -101,18 +101,19 @@ object IvfPq {
   private def qvecCol(normalized: Boolean) =
     if (normalized) graft.GraftFunctions.l2Normalize(col("qvec")) else col("qvec")
 
-  /** Per-cell ADC lookup tables for the probed cells: the query's
-    * residual against cell c feeds the same LUT build the flat PQ
-    * probe uses — one tiny frame (nProbe rows), broadcast. */
-  private def probeLuts(query: DataFrame, centers: Seq[(Int, Array[Double])],
-                        books: PqIndex.Codebooks, probe: Seq[Int],
-                        normalized: Boolean): DataFrame = {
-    val cents = centroidFrame(query.sparkSession,
-      centers.filter(c => probe.contains(c._1)))
-    cents.crossJoin(query.select(qvecCol(normalized).as("qvec")))
-      .withColumn("__qres",
-        zip_with(col("qvec").cast("array<double>"), col("centroid"), (x, y) => x - y))
-      .select(col("cluster"), PqIndex.lutCol(books, col("__qres")).as("__lut"))
+  /** Per-cell ADC lookup tables for the probed cells, keyed by
+    * cluster: the query's residual against cell c feeds the same LUT
+    * build the flat PQ probe uses. Evaluated on the driver over the
+    * local centroid rows and bound as one map literal. */
+  private def probeLuts(spark: SparkSession, qv: Array[Double],
+                        centers: Seq[(Int, Array[Double])],
+                        books: PqIndex.Codebooks, probe: Seq[Int]): Column = {
+    val luts = centroidFrame(spark, centers.filter(c => probe.contains(c._1)))
+      .select(col("cluster"), PqIndex.lutCol(books,
+        zip_with(typedLit(qv.toList), col("centroid"), (x, y) => x - y)))
+      .collect()
+    typedLit(luts.map(r => r.getInt(0) ->
+      r.getSeq[scala.collection.Seq[Double]](1).map(_.toList).toList).toMap)
   }
 
   /**
@@ -123,34 +124,19 @@ object IvfPq {
   def search(idx: Index, query: DataFrame, idCol: String, vecCol: String,
              k: Int, nProbe: Int = 4, metric: String = "euclidean",
              rerankFactor: Int = 5, normalized: Boolean = false): DataFrame = {
-    val qv = query.select(qvecCol(normalized).cast("array<double>").as("qvec"))
-      .head.getSeq[Double](0).toArray
-    val probe = IvfIndex.nearestClusters(idx.centers, qv, nProbe)
-    val luts = probeLuts(query, idx.centers, idx.books, probe, normalized)
-    // Phase 2 re-reads ONLY the probed cells (partition pruning —
-    // previously the semi-join scanned every cell's float column) and
-    // pushes the bounded shortlist in as an In-filter: on the
-    // id-sorted cell files, row-group min/max stats turn the re-rank
-    // fetch into point reads.
-    val ids = idx.encoded
-      .filter(col("cluster").isin(probe.map(Int.box): _*))
-      .select(col(idCol), col("cluster"), col("pq_codes"))
-      .join(broadcast(luts), "cluster")
-      .select(col(idCol), PqIndex.adcCol(idx.books.size).as("adc"))
-      .orderBy(col("adc").asc, col(idCol).asc)
-      .limit(k * rerankFactor)
-      .collect().map(_.get(0))
-    if (ids.isEmpty)
-      return idx.encoded.limit(0).crossJoin(broadcast(query.select(col("qvec"))))
-        .select(col(idCol), lit(0.0).as("score"))
-    idx.encoded
-      .filter(col("cluster").isin(probe.map(Int.box): _*) &&
-        col(idCol).isin(ids: _*))
-      .crossJoin(broadcast(query.select(col("qvec"))))
-      .select(col(idCol),
-        round(VectorSearch.similarity(metric, col(vecCol), col("qvec")), 6).as("score"))
-      .orderBy(col("score").desc, col(idCol).asc)
-      .limit(k)
+    VectorSearch.withQuery(idx.encoded, query, idCol,
+        qvecCol(normalized).cast("array<double>")) { q =>
+      val qv = q.extra.getSeq[Double](0).toArray
+      val probe = IvfIndex.nearestClusters(idx.centers, qv, nProbe)
+      val luts = probeLuts(idx.encoded.sparkSession, qv, idx.centers, idx.books, probe)
+      // Both phases read ONLY the probed cells (partition pruning); the
+      // ADC shortlist then point-reads the id-sorted cell files
+      // (VectorSearch.shortlistRerank).
+      VectorSearch.shortlistRerank(
+        idx.encoded.filter(col("cluster").isin(probe.map(Int.box): _*)),
+        PqIndex.adcCol(idx.books.size, element_at(luts, col("cluster"))),
+        highFirst = false, k * rerankFactor, q.qvec, idCol, vecCol, k, metric)
+    }
   }
 
   /**

@@ -84,9 +84,9 @@ object PqIndex {
 
   /** ADC distance: m table lookups added in fixed subspace order (a
     * left-assoc chain — the oracle replays the identical sum). */
-  private[operators] def adcCol(m: Int): Column =
+  private[operators] def adcCol(m: Int, lut: Column = col("__lut")): Column =
     (0 until m).map(s =>
-      element_at(element_at(col("__lut"), s + 1),
+      element_at(element_at(lut, s + 1),
         element_at(col("pq_codes"), s + 1) + 1))
       .reduce(_ + _)
 
@@ -104,28 +104,14 @@ object PqIndex {
     // normalizes identically before the table build; the exact phase-2
     // re-rank always runs on the raw vectors with the caller's metric.
     val qv = if (normalized) graft.GraftFunctions.l2Normalize(col("qvec")) else col("qvec")
-    val q2 = broadcast(query.select(lutCol(books, qv).as("__lut")))
-    // Phase 2 resolves the bounded (k*rerankFactor-row) ADC shortlist
-    // driver-side and pushes it into the float scan as an In-filter:
-    // on the id-clustered codes layout (files sorted by (source, id)
-    // with row-group min/max stats) parquet skips every row group
-    // holding no survivor — point reads, where a semi-join would
-    // re-scan the full float column.
-    val ids = encoded.select(col(idCol), col("pq_codes"))
-      .crossJoin(q2)
-      .select(col(idCol), adcCol(books.size).as("adc"))
-      .orderBy(col("adc").asc, col(idCol).asc)
-      .limit(k * rerankFactor)
-      .collect().map(_.get(0))
-    if (ids.isEmpty)
-      return encoded.limit(0).crossJoin(broadcast(query.select(col("qvec"))))
-        .select(col(idCol), lit(0.0).as("score"))
-    encoded.filter(col(idCol).isin(ids: _*))
-      .crossJoin(broadcast(query.select(col("qvec"))))
-      .select(col(idCol),
-        round(VectorSearch.similarity(metric, col(vecCol), col("qvec")), 6).as("score"))
-      .orderBy(col("score").desc, col(idCol).asc)
-      .limit(k)
+    // the lookup table is evaluated with the query row, on the driver;
+    // the ADC shortlist then point-reads the floats of the id-clustered
+    // codes layout (VectorSearch.shortlistRerank)
+    VectorSearch.withQuery(encoded, query, idCol, lutCol(books, qv)) { q =>
+      val lut = q.extra.getSeq[scala.collection.Seq[Double]](0).map(_.toList).toList
+      VectorSearch.shortlistRerank(encoded, adcCol(books.size, typedLit(lut)),
+        highFirst = false, k * rerankFactor, q.qvec, idCol, vecCol, k, metric)
+    }
   }
 
   /**

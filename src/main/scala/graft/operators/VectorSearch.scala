@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, FloatType}
 import graft.GraftFunctions._
 
 /**
@@ -14,8 +15,10 @@ import graft.GraftFunctions._
  *    scan; `orderBy(desc).limit(k)` plans as TakeOrderedAndProject =
  *    per-partition top-k heap + driver merge of k rows per partition.
  *    No global sort, no shuffle of the corpus.
- *  - The query side is always tiny (a handful of vectors) and is
- *    broadcast; the corpus is never moved.
+ *  - Single-query operators resolve the query row once on the driver
+ *    ([[bindQuery]]) and bind its vector into the kernel expressions
+ *    as a literal: no join, no broadcast, and the corpus is never
+ *    moved. Batch operators broadcast their (small) query side.
  *  - LSH: bucket ids map-side, candidates via equi-join on
  *    (table, bucket) — shuffle carries only matching buckets; AQE
  *    handles skewed buckets.
@@ -33,18 +36,85 @@ object VectorSearch {
     case other         => throw new IllegalArgumentException(s"unknown metric: $other")
   }
 
+  /** The query of a single-query operator, resolved on the driver:
+    * `vec` (widened to doubles) feeds driver-side probe math, `qvec` is
+    * the same vector as a literal of the frame's own `qvec` type, and
+    * `extra` holds the values of the query-side columns the caller
+    * asked [[bindQuery]] to evaluate alongside it. */
+  private[graft] final case class BoundQuery(vec: Array[Double], qvec: Column, extra: Row)
+
+  /** Resolve the one row of a single-query frame (a `qvec` column), and
+    * `extra` columns over it, in one pass — None when the frame has no
+    * row. A frame over a local relation (every VectorLibrary query
+    * frame) resolves while planning, without a Spark job. Several rows
+    * are refused: one literal cannot stand for them, and the batch
+    * twins are the multi-query path. */
+  private[graft] def bindQuery(query: DataFrame, extra: Column*): Option[BoundQuery] = {
+    val dt = query.schema("qvec").dataType
+    val rows = query.select(col("qvec") +: extra: _*).head(2)
+    require(rows.length <= 1,
+      "a single-query operator takes a one-row query frame; use its batch twin")
+    rows.headOption.map { r =>
+      val extras = Row.fromSeq(r.toSeq.tail)
+      if (r.isNullAt(0)) BoundQuery(Array.empty, lit(null).cast(dt), extras)
+      else {
+        val vec = r.getSeq[Any](0).map(_.asInstanceOf[Number].doubleValue).toArray
+        val qvec = dt match {
+          case ArrayType(FloatType, _) => typedLit(r.getSeq[Float](0).toList)
+          case _ => typedLit(vec.toList).cast(dt)
+        }
+        BoundQuery(vec, qvec, extras)
+      }
+    }
+  }
+
+  /** Bind `query` and build the search over it; a zero-row query frame
+    * answers no hits. */
+  private[graft] def withQuery(rows: DataFrame, query: DataFrame, idCol: String,
+                               extra: Column*)(body: BoundQuery => DataFrame): DataFrame =
+    bindQuery(query, extra: _*).fold(noHits(rows, idCol))(body)
+
+  /** Zero-row (id, score) answer. */
+  private[graft] def noHits(rows: DataFrame, idCol: String): DataFrame =
+    rows.select(col(idCol), lit(0.0).as("score")).limit(0)
+
+  /** The exact score every search reports: similarity to the bound
+    * query vector, rounded to 6 dp. */
+  private[graft] def scoreCol(metric: String, vecCol: String, qvec: Column): Column =
+    round(similarity(metric, col(vecCol), qvec), 6).as("score")
+
+  /** Exact top-k of `rows` against the bound query vector, ties by id
+    * ascending — plans as one TakeOrderedAndProject over the scan. */
+  private[graft] def rerank(rows: DataFrame, qvec: Column, idCol: String, vecCol: String,
+                            k: Int, metric: String): DataFrame =
+    rows.select(col(idCol), scoreCol(metric, vecCol, qvec))
+      .orderBy(col("score").desc, col(idCol).asc)
+      .limit(k)
+
+  /** Two-phase tail: the `n` best rows by `approx` (`highFirst` picks
+    * the direction, ties by id ascending) resolve on the driver as a
+    * bounded shortlist, pushed into the exact re-rank scan as an
+    * In-filter — row-group point reads on an id-clustered layout,
+    * where a semi-join would re-scan the full float column. */
+  private[graft] def shortlistRerank(rows: DataFrame, approx: Column, highFirst: Boolean,
+                                     n: Int, qvec: Column, idCol: String, vecCol: String,
+                                     k: Int, metric: String): DataFrame = {
+    val a = col("__approx")
+    val ids = rows.select(col(idCol), approx.as("__approx"))
+      .orderBy(if (highFirst) a.desc else a.asc, col(idCol).asc)
+      .limit(n)
+      .collect().map(_.get(0))
+    if (ids.isEmpty) noHits(rows, idCol)
+    else rerank(rows.filter(col(idCol).isin(ids: _*)), qvec, idCol, vecCol, k, metric)
+  }
+
   /**
    * Exact (Flat) top-k against a single query row.
    * `query` must be a 1-row frame with a `qvec` column.
    */
   def knnFlat(corpus: DataFrame, query: DataFrame, idCol: String, vecCol: String,
-              k: Int, metric: String): DataFrame = {
-    corpus.crossJoin(broadcast(query))
-      .select(col(idCol),
-        round(similarity(metric, col(vecCol), col("qvec")), 6).as("score"))
-      .orderBy(col("score").desc, col(idCol).asc)
-      .limit(k)
-  }
+              k: Int, metric: String): DataFrame =
+    withQuery(corpus, query, idCol)(q => rerank(corpus, q.qvec, idCol, vecCol, k, metric))
 
   /**
    * Batched exact top-k: one result group per query row. Queries are
@@ -164,37 +234,31 @@ object VectorSearch {
     // it per referenced table). Explode carries only (id, tbl,
     // bucket); the embedding never rides through the join. With a
     // store, use lshKnnIndexed instead.
-    val corpusB = corpus
-      .select(col(idCol),
-        posexplode(lshBuckets(col(vecCol), numTables, bitsPerTable, seed))
-          .as(Seq("tbl", "bucket")))
-    val queryB = query.sparkSession.createDataFrame(
-      probeBuckets(query, numTables, bitsPerTable, seed, extraProbes)
-        .zipWithIndex.flatMap { case (bs, t) => bs.map(b => (t, b)) }.toSeq)
-      .toDF("tbl", "bucket")
-    // Distinct candidate IDS (hash-aggregable scalars), then semi-join
-    // the corpus. The probe side is a handful of literal rows and
-    // stays broadcast; the candidate set is NOT hinted (it grows with
-    // corpus size and hot buckets — AQE picks the join strategy).
-    val candIds = corpusB
-      .join(broadcast(queryB), Seq("tbl", "bucket"))
-      .select(col(idCol)).distinct()
-    corpus.join(candIds, Seq(idCol), "left_semi")
-      .crossJoin(broadcast(query))
-      .select(col(idCol), round(similarity(metric, col(vecCol), col("qvec")), 6).as("score"))
-      .orderBy(col("score").desc, col(idCol).asc)
-      .limit(k)
+    withQuery(corpus, query, idCol) { q =>
+      val corpusB = corpus
+        .select(col(idCol),
+          posexplode(lshBuckets(col(vecCol), numTables, bitsPerTable, seed))
+            .as(Seq("tbl", "bucket")))
+      val queryB = query.sparkSession.createDataFrame(
+        probeBuckets(q.vec, numTables, bitsPerTable, seed, extraProbes)
+          .zipWithIndex.flatMap { case (bs, t) => bs.map(b => (t, b)) }.toSeq)
+        .toDF("tbl", "bucket")
+      // Distinct candidate IDS (hash-aggregable scalars), then semi-join
+      // the corpus. The probe side is a handful of literal rows and
+      // stays broadcast; the candidate set is NOT hinted (it grows with
+      // corpus size and hot buckets — AQE picks the join strategy).
+      val candIds = corpusB
+        .join(broadcast(queryB), Seq("tbl", "bucket"))
+        .select(col(idCol)).distinct()
+      rerank(corpus.join(candIds, Seq(idCol), "left_semi"), q.qvec, idCol, vecCol, k, metric)
+    }
   }
 
-  /** Multi-probe buckets of the (single-row) query, resolved on the
-    * driver: per table, the main bucket plus the lowest-margin
-    * bit-flip variants, deduplicated. The driver-side resolve is the
-    * same escape hatch gridKnn uses for its literal cell probe — the
-    * query side is one row by contract. */
-  private[graft] def probeBuckets(query: DataFrame, numTables: Int, bitsPerTable: Int,
+  /** Multi-probe buckets of the query vector: per table, the main
+    * bucket plus the lowest-margin bit-flip variants, deduplicated. */
+  private[graft] def probeBuckets(qv: Array[Double], numTables: Int, bitsPerTable: Int,
                                   seed: Long, extraProbes: Int): Array[Array[Int]] = {
     import graft.functions.TextHash
-    val qv = query.select(col("qvec")).head.getSeq[Float](0).map(_.toDouble).toArray
     val flat = TextHash.hyperplaneProbesArr(qv, numTables, bitsPerTable, extraProbes, seed)
     val perTable = 1 + extraProbes
     Array.tabulate(numTables)(t =>
@@ -221,15 +285,13 @@ object VectorSearch {
                     bucketsCol: String, k: Int, metric: String = "cosine",
                     numTables: Int = 8, bitsPerTable: Int = 8, seed: Long = 42L,
                     extraProbes: Int = 2): DataFrame = {
-    val candidate = probeBuckets(query, numTables, bitsPerTable, seed, extraProbes)
-      .zipWithIndex.map { case (bs, t) =>
-        element_at(col(bucketsCol), t + 1).isin(bs.map(Int.box).toSeq: _*)
-      }.reduce(_ || _)
-    indexed.filter(candidate)
-      .crossJoin(broadcast(query))
-      .select(col(idCol), round(similarity(metric, col(vecCol), col("qvec")), 6).as("score"))
-      .orderBy(col("score").desc, col(idCol).asc)
-      .limit(k)
+    withQuery(indexed, query, idCol) { q =>
+      val candidate = probeBuckets(q.vec, numTables, bitsPerTable, seed, extraProbes)
+        .zipWithIndex.map { case (bs, t) =>
+          element_at(col(bucketsCol), t + 1).isin(bs.map(Int.box).toSeq: _*)
+        }.reduce(_ || _)
+      rerank(indexed.filter(candidate), q.qvec, idCol, vecCol, k, metric)
+    }
   }
 
   /**
@@ -336,17 +398,27 @@ object VectorSearch {
                         vecCol: String, k: Int, metric: String = "cosine",
                         numTables: Int = 8, bitsPerTable: Int = 8, seed: Long = 42L,
                         extraProbes: Int = 2): DataFrame = {
-    val pred = probeBuckets(query, numTables, bitsPerTable, seed, extraProbes)
+    withQuery(index, query, idCol) { q =>
+      dedupTopK(index.filter(partitionProbe(q.vec, numTables, bitsPerTable, seed, extraProbes))
+        .select(col(idCol), scoreCol(metric, vecCol, q.qvec)), idCol, k)
+    }
+  }
+
+  /** Planning-time pruning predicate of the bucket-partitioned index:
+    * the probed (tbl, bucket) directories of one query vector. */
+  private def partitionProbe(qv: Array[Double], numTables: Int, bitsPerTable: Int,
+                             seed: Long, extraProbes: Int): Column =
+    probeBuckets(qv, numTables, bitsPerTable, seed, extraProbes)
       .zipWithIndex.map { case (bs, t) =>
         col("tbl") === t && col("bucket").isin(bs.map(Int.box).toSeq: _*)
       }.reduce(_ || _)
-    index.filter(pred)
-      .crossJoin(broadcast(query))
-      .select(col(idCol), round(similarity(metric, col(vecCol), col("qvec")), 6).as("score"))
-      .groupBy(col(idCol)).agg(max(col("score")).as("score"))
+
+  /** Top-k over (id, score) rows where one id can occur several times
+    * (multi-table hits) with the same score: max is a pure dedup. */
+  private[graft] def dedupTopK(scored: DataFrame, idCol: String, k: Int): DataFrame =
+    scored.groupBy(col(idCol)).agg(max(col("score")).as("score"))
       .orderBy(col("score").desc, col(idCol).asc)
       .limit(k)
-  }
 
   /**
    * Fully index-resident two-phase probe of the bucket-PARTITIONED
@@ -370,34 +442,29 @@ object VectorSearch {
                                  numTables: Int = 8, bitsPerTable: Int = 8,
                                  seed: Long = 42L, extraProbes: Int = 2,
                                  rerankFactor: Int = 4): DataFrame = {
-    val pred = probeBuckets(query, numTables, bitsPerTable, seed, extraProbes)
-      .zipWithIndex.map { case (bs, t) =>
-        col("tbl") === t && col("bucket").isin(bs.map(Int.box).toSeq: _*)
-      }.reduce(_ || _)
-    val pruned = index.filter(pred)
-    val queryQ = broadcast(query.select(
-      quantizeVec(l2Normalize(col("qvec"))).as("qqv")))
-    // Phase 2 stays a LAZY pruned semi-join here (unlike the
-    // binary/PQ/IVF-PQ probes, which switched to driver-resolved
-    // In-filter point reads): both phases already read only the
-    // probed (tbl, bucket) directories, whose occupancy the
-    // bits-scaling ingest rule holds constant in corpus size — so the
-    // semi-join's float I/O is already corpus-independent, and the
-    // one-job plan skips a driver sync per query.
-    val candIds = pruned.select(col(idCol), col(codesCol).as("codes"))
-      .crossJoin(queryQ)
-      .select(col(idCol), quantizedDot(col("codes"), col("qqv")).as("ascore"))
-      .groupBy(col(idCol)).agg(max(col("ascore")).as("ascore"))
-      .orderBy(col("ascore").desc, col(idCol).asc)
-      .limit(k * rerankFactor)
-      .select(col(idCol))
-    pruned.join(candIds, Seq(idCol), "left_semi")
-      .crossJoin(broadcast(query))
-      .select(col(idCol), round(similarity(metric, col(vecCol), col("qvec")), 6).as("score"))
-      .groupBy(col(idCol)).agg(max(col("score")).as("score"))
-      .orderBy(col("score").desc, col(idCol).asc)
-      .limit(k)
+    withQuery(index, query, idCol) { q =>
+      val pruned = index.filter(partitionProbe(q.vec, numTables, bitsPerTable, seed, extraProbes))
+      // Phase 2 stays a LAZY pruned semi-join here (unlike the
+      // binary/PQ/IVF-PQ probes, which switched to driver-resolved
+      // In-filter point reads): both phases already read only the
+      // probed (tbl, bucket) directories, whose occupancy the
+      // bits-scaling ingest rule holds constant in corpus size — so the
+      // semi-join's float I/O is already corpus-independent, and the
+      // one-job plan skips a driver sync per query.
+      val candIds = pruned
+        .select(col(idCol), quantizedDot(col(codesCol), quantizedQuery(q.qvec)).as("ascore"))
+        .groupBy(col(idCol)).agg(max(col("ascore")).as("ascore"))
+        .orderBy(col("ascore").desc, col(idCol).asc)
+        .limit(k * rerankFactor)
+        .select(col(idCol))
+      dedupTopK(pruned.join(candIds, Seq(idCol), "left_semi")
+        .select(col(idCol), scoreCol(metric, vecCol, q.qvec)), idCol, k)
+    }
   }
+
+  /** The int8 code of the query vector (constant-folded while planning
+    * when the vector is a literal). */
+  private def quantizedQuery(qvec: Column): Column = quantizeVec(l2Normalize(qvec))
 
   /**
    * Batch probe of the bucket-PARTITIONED index: the UNION of all
@@ -467,21 +534,15 @@ object VectorSearch {
   def gridKnn(corpus: DataFrame, query: DataFrame, idCol: String, vecCol: String,
               k: Int, metric: String = "euclidean",
               gridDims: Int = 4, cellsPerDim: Int = 4): DataFrame = {
-    val (lo, hi) = gridBounds(corpus, vecCol, gridDims)
-    val corpusC = corpus.withColumn("cell",
-      cellKeyCol(col(vecCol), lo, hi, cellsPerDim))
-
-    // The query side is one row: resolve its cell on the driver and
-    // probe the corpus with literal neighbor-cell keys (a tiny IN
-    // filter pushed into the scan — no generated 81-way expression).
-    val qv = query.select(col("qvec")).head.getSeq[Float](0)
-    val probeKeys = queryProbeKeys(qv, lo, hi, gridDims, cellsPerDim)
-
-    corpusC.filter(col("cell").isin(probeKeys: _*))
-      .crossJoin(broadcast(query))
-      .select(col(idCol), round(similarity(metric, col(vecCol), col("qvec")), 6).as("score"))
-      .orderBy(col("score").desc, col(idCol).asc)
-      .limit(k)
+    withQuery(corpus, query, idCol) { q =>
+      val (lo, hi) = gridBounds(corpus, vecCol, gridDims)
+      // The query side is one row: resolve its cell on the driver and
+      // probe the corpus with literal neighbor-cell keys (a tiny IN
+      // filter pushed into the scan — no generated 81-way expression).
+      val probeKeys = queryProbeKeys(q.vec, lo, hi, gridDims, cellsPerDim)
+      rerank(corpus.withColumn("cell", cellKeyCol(col(vecCol), lo, hi, cellsPerDim))
+        .filter(col("cell").isin(probeKeys: _*)), q.qvec, idCol, vecCol, k, metric)
+    }
   }
 
   /** One partial-aggregated pass for per-dimension grid bounds. */
@@ -497,24 +558,16 @@ object VectorSearch {
   /** Clamped cell key of a stored vector, as "c0,c1,...". */
   private[graft] def cellKeyCol(vc: Column, lo: Array[Double], hi: Array[Double],
                                 cellsPerDim: Int): Column =
-    concat_ws(",", lo.indices.map { d =>
-      val range = math.max(hi(d) - lo(d), 1e-12)
-      least(greatest(floor((vc.getItem(d) - lit(lo(d))) / lit(range) * cellsPerDim), lit(0)),
-        lit(cellsPerDim - 1)).cast("int")
-    }: _*)
+    concat_ws(",", lo.indices.map(cellCol(vc, lo, hi, cellsPerDim, _)): _*)
 
   /** Driver-resolved neighbor-cell probe keys for one query vector. */
-  private def queryProbeKeys(qv: Seq[Float], lo: Array[Double], hi: Array[Double],
+  private def queryProbeKeys(qv: Seq[Double], lo: Array[Double], hi: Array[Double],
                              gridDims: Int, cellsPerDim: Int): Seq[String] = {
-    def qCell(d: Int): Int = {
-      val range = math.max(hi(d) - lo(d), 1e-12)
-      math.min(math.max(math.floor((qv(d) - lo(d)) / range * cellsPerDim).toInt, 0),
-        cellsPerDim - 1)
-    }
+    val qCells = qCellsOf(qv, lo, hi, gridDims, cellsPerDim)
     val offsets = Seq.fill(gridDims)(Seq(-1, 0, 1))
       .foldLeft(Seq(Seq.empty[Int]))((acc, s) => acc.flatMap(p => s.map(p :+ _)))
     offsets.map(off =>
-      (0 until gridDims).map(d => qCell(d) + off(d)).mkString(",")).distinct
+      (0 until gridDims).map(d => qCells(d) + off(d)).mkString(",")).distinct
   }
 
   /**
@@ -539,31 +592,19 @@ object VectorSearch {
                        gridDims: Int = 4, cellsPerDim: Int = 4,
                        maxRadius: Int = 3): DataFrame = {
     require(gridDims >= 2, "gridKnnExpanding needs at least 2 grid dimensions")
-    val (lo, hi) = gridBounds(corpus, vecCol, gridDims)
-    val qv = query.select(col("qvec")).head.getSeq[Float](0)
-    def qCell(d: Int): Int = {
-      val range = math.max(hi(d) - lo(d), 1e-12)
-      math.min(math.max(math.floor((qv(d) - lo(d)) / range * cellsPerDim).toInt, 0),
-        cellsPerDim - 1)
+    withQuery(corpus, query, idCol) { q =>
+      val (lo, hi) = gridBounds(corpus, vecCol, gridDims)
+      val qCells = qCellsOf(q.vec, lo, hi, gridDims, cellsPerDim)
+      val chebCol = greatest((0 until gridDims).map(d =>
+        abs(cellCol(col(vecCol), lo, hi, cellsPerDim, d) - lit(qCells(d)))): _*)
+      val corpusC = corpus.withColumn("cheb", chebCol)
+      val hist = corpusC.filter(col("cheb") <= maxRadius)
+        .groupBy(col("cheb")).count().collect()
+        .map(r => (r.getInt(0), r.getLong(1))).toMap
+      val cum = (0 to maxRadius).map(r => (0 to r).map(hist.getOrElse(_, 0L)).sum)
+      val radius = (0 to maxRadius).find(r => cum(r) >= 2L * k).getOrElse(maxRadius)
+      rerank(corpusC.filter(col("cheb") <= radius), q.qvec, idCol, vecCol, k, metric)
     }
-    val chebCol = greatest((0 until gridDims).map { d =>
-      val range = math.max(hi(d) - lo(d), 1e-12)
-      val c = least(greatest(
-        floor((col(vecCol).getItem(d) - lit(lo(d))) / lit(range) * cellsPerDim),
-        lit(0)), lit(cellsPerDim - 1)).cast("int")
-      abs(c - lit(qCell(d)))
-    }: _*)
-    val corpusC = corpus.withColumn("cheb", chebCol)
-    val hist = corpusC.filter(col("cheb") <= maxRadius)
-      .groupBy(col("cheb")).count().collect()
-      .map(r => (r.getInt(0), r.getLong(1))).toMap
-    val cum = (0 to maxRadius).map(r => (0 to r).map(hist.getOrElse(_, 0L)).sum)
-    val radius = (0 to maxRadius).find(r => cum(r) >= 2L * k).getOrElse(maxRadius)
-    corpusC.filter(col("cheb") <= radius)
-      .crossJoin(broadcast(query))
-      .select(col(idCol), round(similarity(metric, col(vecCol), col("qvec")), 6).as("score"))
-      .orderBy(col("score").desc, col(idCol).asc)
-      .limit(k)
   }
 
   /**
@@ -583,22 +624,12 @@ object VectorSearch {
     val spark = corpus.sparkSession
     import spark.implicits._
     val (lo, hi) = gridBounds(corpus, vecCol, gridDims)
-    def cellCol(d: Int): Column = {
-      val range = math.max(hi(d) - lo(d), 1e-12)
-      least(greatest(
-        floor((col(vecCol).getItem(d) - lit(lo(d))) / lit(range) * cellsPerDim),
-        lit(0)), lit(cellsPerDim - 1)).cast("int")
-    }
     val corpusC = corpus.withColumn("__cells",
-      array((0 until gridDims).map(cellCol): _*))
+      array((0 until gridDims).map(cellCol(col(vecCol), lo, hi, cellsPerDim, _)): _*))
     val qRows = queries.select(col("query_id"), col("qvec")).collect()
     require(qRows.nonEmpty, "gridKnnExpandingBatch needs at least one query")
-    def qCells(qv: Seq[Float]): Seq[Int] = (0 until gridDims).map { d =>
-      val range = math.max(hi(d) - lo(d), 1e-12)
-      math.min(math.max(math.floor((qv(d) - lo(d)) / range * cellsPerDim).toInt, 0),
-        cellsPerDim - 1)
-    }
-    val qCellRows = qRows.map(r => (r.getLong(0), qCells(r.getSeq[Float](1)))).toSeq
+    val qCellRows = qRows.map(r =>
+      (r.getLong(0), qCellsOf(floats(r, 1), lo, hi, gridDims, cellsPerDim))).toSeq
     val qCellFrame = qCellRows.toDF("query_id", "qcells")
     val cheb = greatest((0 until gridDims).map(d =>
       abs(element_at(col("__cells"), d + 1) - element_at(col("qcells"), d + 1))): _*)
@@ -623,8 +654,19 @@ object VectorSearch {
     finishPerQueryTopK(scored, idCol, k)
   }
 
+  /** Clamped grid coordinate of a stored vector along dimension `d`. */
+  private def cellCol(vc: Column, lo: Array[Double], hi: Array[Double],
+                      cellsPerDim: Int, d: Int): Column = {
+    val range = math.max(hi(d) - lo(d), 1e-12)
+    least(greatest(floor((vc.getItem(d) - lit(lo(d))) / lit(range) * cellsPerDim),
+      lit(0)), lit(cellsPerDim - 1)).cast("int")
+  }
+
+  /** A batch query row's float vector, widened to doubles. */
+  private def floats(r: Row, i: Int): Seq[Double] = r.getSeq[Float](i).map(_.toDouble).toSeq
+
   /** Query cell coordinates under frozen bounds (clamped). */
-  private def qCellsOf(qv: Seq[Float], lo: Array[Double], hi: Array[Double],
+  private def qCellsOf(qv: Seq[Double], lo: Array[Double], hi: Array[Double],
                        gridDims: Int, cellsPerDim: Int): Seq[Int] =
     (0 until gridDims).map { d =>
       val range = math.max(hi(d) - lo(d), 1e-12)
@@ -673,15 +715,12 @@ object VectorSearch {
                      metric: String = "euclidean", gridDims: Int = 4,
                      cellsPerDim: Int = 4, maxRadius: Int = 3,
                      countsOpt: Option[Seq[(String, Long)]] = None): DataFrame = {
-    val qv = query.select(col("qvec")).head.getSeq[Float](0)
-    val qCells = qCellsOf(qv, lo, hi, gridDims, cellsPerDim)
-    val counts = countsOpt.getOrElse(gridCellCounts(index))
-    val probe = radiusProbe(counts, qCells, k, maxRadius)
-    index.filter(col("cell").isin(probe: _*))
-      .crossJoin(broadcast(query))
-      .select(col(idCol), round(similarity(metric, col(vecCol), col("qvec")), 6).as("score"))
-      .orderBy(col("score").desc, col(idCol).asc)
-      .limit(k)
+    withQuery(index, query, idCol) { q =>
+      val qCells = qCellsOf(q.vec, lo, hi, gridDims, cellsPerDim)
+      val counts = countsOpt.getOrElse(gridCellCounts(index))
+      val probe = radiusProbe(counts, qCells, k, maxRadius)
+      rerank(index.filter(col("cell").isin(probe: _*)), q.qvec, idCol, vecCol, k, metric)
+    }
   }
 
   /** Batch twin of [[gridKnnIndexed]]: every query's radius resolves
@@ -700,7 +739,7 @@ object VectorSearch {
     val qRows = queries.select(col("query_id"), col("qvec")).collect()
     require(qRows.nonEmpty, "gridKnnIndexedBatch needs at least one query")
     val pairs = qRows.flatMap { r =>
-      val qCells = qCellsOf(r.getSeq[Float](1), lo, hi, gridDims, cellsPerDim)
+      val qCells = qCellsOf(floats(r, 1), lo, hi, gridDims, cellsPerDim)
       radiusProbe(counts, qCells, k, maxRadius).map(cell => (r.getLong(0), cell))
     }.toSeq
     val pairFrame = pairs.toDF("query_id", "cell")
@@ -730,7 +769,7 @@ object VectorSearch {
       cellKeyCol(col(vecCol), lo, hi, cellsPerDim))
     val qRows = queries.select(col("query_id"), col("qvec")).collect()
     val pairs = qRows.flatMap { r =>
-      queryProbeKeys(r.getSeq[Float](1), lo, hi, gridDims, cellsPerDim)
+      queryProbeKeys(floats(r, 1), lo, hi, gridDims, cellsPerDim)
         .map(cell => (r.getLong(0), cell))
     }.toSeq
     val pairFrame = pairs.toDF("query_id", "cell")
@@ -758,13 +797,12 @@ object VectorSearch {
    * filter, arbitrarily parallel.
    */
   def rangeSearch(corpus: DataFrame, query: DataFrame, idCol: String, vecCol: String,
-                  minScore: Double, metric: String): DataFrame = {
-    corpus.crossJoin(broadcast(query))
-      .select(col(idCol),
-        round(similarity(metric, col(vecCol), col("qvec")), 6).as("score"))
-      .filter(col("score") >= minScore)
-      .orderBy(col("score").desc, col(idCol).asc)
-  }
+                  minScore: Double, metric: String): DataFrame =
+    withQuery(corpus, query, idCol) { q =>
+      corpus.select(col(idCol), scoreCol(metric, vecCol, q.qvec))
+        .filter(col("score") >= minScore)
+        .orderBy(col("score").desc, col(idCol).asc)
+    }
 
   /**
    * Quantized two-phase search: int8 approximate scan (4x less data,
@@ -794,26 +832,10 @@ object VectorSearch {
   def knnQuantizedIndexed(indexed: DataFrame, query: DataFrame, idCol: String,
                           vecCol: String, codesCol: String, k: Int,
                           metric: String = "cosine", rerankFactor: Int = 4): DataFrame = {
-    val queryQ = broadcast(query.select(
-      quantizeVec(l2Normalize(col("qvec"))).as("qqv")))
-    // Bounded shortlist resolved driver-side and pushed into the
-    // float scan as an In-filter — row-group point reads on an
-    // id-clustered store, instead of a full-float-column semi-join
-    // (the binary/PQ/IVF-PQ phase-2 discipline).
-    val ids = indexed.select(col(idCol), col(codesCol).as("codes"))
-      .crossJoin(queryQ)
-      .select(col(idCol), quantizedDot(col("codes"), col("qqv")).as("ascore"))
-      .orderBy(col("ascore").desc, col(idCol).asc)
-      .limit(k * rerankFactor)
-      .collect().map(_.get(0))
-    if (ids.isEmpty)
-      return indexed.limit(0).crossJoin(broadcast(query))
-        .select(col(idCol), lit(0.0).as("score"))
-    indexed.filter(col(idCol).isin(ids: _*))
-      .crossJoin(broadcast(query))
-      .select(col(idCol), round(similarity(metric, col(vecCol), col("qvec")), 6).as("score"))
-      .orderBy(col("score").desc, col(idCol).asc)
-      .limit(k)
+    withQuery(indexed, query, idCol) { q =>
+      shortlistRerank(indexed, quantizedDot(col(codesCol), quantizedQuery(q.qvec)),
+        highFirst = true, k * rerankFactor, q.qvec, idCol, vecCol, k, metric)
+    }
   }
 
   /**
@@ -864,37 +886,15 @@ object VectorSearch {
 
   /** Binary search against PRE-BUILT packed codes: the phase-1 scan
     * reads the codes column only (8 bytes/row at 64 dims); floats are
-    * fetched for just the shortlist via a semi-join.
-    *
-    * `query` must be a SINGLE-ROW frame (the convention of every
-    * single-query operator in this file): with multiple rows the
-    * broadcast crossJoin would merge all queries' Hamming distances
-    * into one global shortlist. [[knnBinaryBatch]] is the documented
-    * multi-query path. */
+    * fetched for just the shortlist as an In-filter point read.
+    * [[knnBinaryBatch]] is the multi-query path. */
   def knnBinaryIndexed(indexed: DataFrame, query: DataFrame, idCol: String,
                        vecCol: String, codesCol: String, k: Int,
                        metric: String = "cosine", rerankFactor: Int = 8): DataFrame = {
-    val queryB = broadcast(query.select(bitPack(col("qvec")).as("qbits")))
-    // Phase 2 resolves the bounded (k*rerankFactor-row) shortlist
-    // driver-side and pushes it into the float scan as an In-filter:
-    // with the store clustered by id (the library layout keeps files
-    // id-sorted with row-group min/max stats), parquet skips every
-    // row group holding no survivor — point reads, where the earlier
-    // semi-join re-scanned the full float column.
-    val ids = indexed.select(col(idCol), col(codesCol).as("bits"))
-      .crossJoin(queryB)
-      .select(col(idCol), bitHamming(col("bits"), col("qbits")).as("hdist"))
-      .orderBy(col("hdist").asc, col(idCol).asc)
-      .limit(k * rerankFactor)
-      .collect().map(_.get(0))
-    if (ids.isEmpty)
-      return indexed.limit(0).crossJoin(broadcast(query))
-        .select(col(idCol), lit(0.0).as("score"))
-    indexed.filter(col(idCol).isin(ids: _*))
-      .crossJoin(broadcast(query))
-      .select(col(idCol), round(similarity(metric, col(vecCol), col("qvec")), 6).as("score"))
-      .orderBy(col("score").desc, col(idCol).asc)
-      .limit(k)
+    withQuery(indexed, query, idCol) { q =>
+      shortlistRerank(indexed, bitHamming(col(codesCol), bitPack(q.qvec)),
+        highFirst = false, k * rerankFactor, q.qvec, idCol, vecCol, k, metric)
+    }
   }
 
   /** Batch binary top-k: ONE codes scan serves every query (phase-1
@@ -1042,15 +1042,16 @@ object VectorSearch {
     // the shortlist must cover k: a k wider than the default window
     // widens the window rather than silently truncating the result
     val window = math.max(shortlist, k)
-    val shortRows = corpus.crossJoin(broadcast(query))
-      .select(col(idCol).as("id"),
-        // double-aware extraction: float and double corpora both read
-        // back as Seq[Double] (same widening every other scan op does)
-        col(vecCol).cast("array<double>").as("__v"),
-        cosineSim(col(vecCol), col("qvec")).as("rel"))
-      .orderBy(col("rel").desc, col("id").asc)
-      .limit(window)
-      .collect()
+    val shortRows = bindQuery(query).fold(Array.empty[Row]) { q =>
+      corpus.select(col(idCol).as("id"),
+          // double-aware extraction: float and double corpora both read
+          // back as Seq[Double] (same widening every other scan op does)
+          col(vecCol).cast("array<double>").as("__v"),
+          cosineSim(col(vecCol), q.qvec).as("rel"))
+        .orderBy(col("rel").desc, col("id").asc)
+        .limit(window)
+        .collect()
+    }
     val ids = shortRows.map(_.get(0))
     val vecs = shortRows.map(_.getSeq[Double](1).toArray)
     val rels = shortRows.map(_.getDouble(2))

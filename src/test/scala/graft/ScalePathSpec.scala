@@ -722,6 +722,26 @@ class ScalePathSpec extends AnyFunSuite {
       "plans with an Exchange must pass through un-probed")
   }
 
+  test("scaleScan never probes a plan holding a subquery") {
+    import graft.GraftFunctions.{narrowChain, scaleScan}
+    // an InSubquery filter over a 1-split scan: the chain is narrow, but
+    // probing Dataset.rdd would run the subquery eagerly
+    val inSub = spark.sql(
+      "SELECT id FROM range(0, 100, 1, 1) WHERE id IN (SELECT id FROM range(10))")
+    assert(!narrowChain(inSub.queryExecution.analyzed),
+      "a filter with an InSubquery is not a probe-safe chain")
+    assert(narrowChain(spark.sql(
+      "SELECT id FROM range(0, 100, 1, 1) WHERE id < 10").queryExecution.analyzed))
+    // a scalar subquery survives optimization: scaleScan must pass the
+    // frame through without running it
+    val scalar = spark.sql(
+      "SELECT id FROM range(0, 100, 1, 1) WHERE id < (SELECT max(id) FROM range(10))")
+    var out: org.apache.spark.sql.DataFrame = null
+    assert(JobCount(spark) { out = scaleScan(scalar) } == 0,
+      "scaleScan executed the subquery eagerly")
+    assert(out eq scalar)
+  }
+
   test("ivfKnnCached: build once, probes reuse the pinned assignment") {
     val corpus = emb.filter(col("vec_id") =!= 0)
     val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qvec"))
