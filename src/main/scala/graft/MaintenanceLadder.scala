@@ -484,7 +484,7 @@ object EpochLadder {
     step("vacuum window-0")(lib.vacuumIndexes(olderThanMs = 0L))
     // whole-store rewrite (the heaviest mutation short of restore):
     // must also install beside the pinned generation, never over it
-    step("whole-store compact(4)")(lib.compact(4))
+    step("whole-store compact")(lib.compact())
     // index rebuild: installs beside the pinned lsh generation (a
     // rebuild once Overwrite-deleted the live dir — the pinned
     // searchApproxAt would have lost its files mid-read)

@@ -3442,10 +3442,8 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
    * compaction rewrites each source into one file (several of advisory
    * size for a large source — the store commit's clustering),
    * restoring scan efficiency without touching row content.
-   * `numPartitions` no longer shapes the layout and is ignored; it
-   * stays for source compatibility.
    */
-  def compact(numPartitions: Int = 1): Unit = withWriterLock {
+  def compact(): Unit = withWriterLock {
     swapStore(chunks, reindex = false)
   }
 

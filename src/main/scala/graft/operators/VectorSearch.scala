@@ -46,12 +46,14 @@ object VectorSearch {
   /** Resolve the one row of a single-query frame (a `qvec` column), and
     * `extra` columns over it, in one pass — None when the frame has no
     * row. A frame over a local relation (every VectorLibrary query
-    * frame) resolves while planning, without a Spark job. Several rows
+    * frame) resolves while planning, without a Spark job; any other
+    * frame costs one job (a collect, not `head`, whose incremental
+    * take can rescan a selective frame over several jobs). Several rows
     * are refused: one literal cannot stand for them, and the batch
     * twins are the multi-query path. */
   private[graft] def bindQuery(query: DataFrame, extra: Column*): Option[BoundQuery] = {
     val dt = query.schema("qvec").dataType
-    val rows = query.select(col("qvec") +: extra: _*).head(2)
+    val rows = query.select(col("qvec") +: extra: _*).collect()
     require(rows.length <= 1,
       "a single-query operator takes a one-row query frame; use its batch twin")
     rows.headOption.map { r =>

@@ -45,15 +45,23 @@ class SearchJobsSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("graft-search-jobs").toString
     val lib = new VectorLibrary(spark, root, "jobs-lib")
     lib.addDocuments(docs)
-    lib.buildGridIndex()
     def jobs(search: => org.apache.spark.sql.DataFrame): Int = {
       search.collect() // warms the per-generation serving caches
       JobCount(spark)(search.collect())
     }
+    // without a grid index, grid search fits the bounds and counts the
+    // expanding-radius histogram before its scan: two aggregates of two
+    // jobs each (adaptive execution runs the shuffle stage as its own
+    // job), then the scan
+    lib.setAlgorithm("grid")
+    assert(jobs(lib.search("spark join stream", k = 5)) == 5, "grid without a grid index")
+    lib.buildGridIndex()
+    lib.buildIvfIndex(nCentroids = 4)
     // the query is resolved on the driver and bound as a literal: the
     // scan is the only job, plus the shortlist collect of the two-phase
     // (quantized, binary) paths
-    val expected = Seq("flat" -> 1, "lsh" -> 1, "grid" -> 1, "quantized" -> 2, "binary" -> 2)
+    val expected = Seq("flat" -> 1, "lsh" -> 1, "grid" -> 1, "ivf" -> 1,
+      "quantized" -> 2, "binary" -> 2)
     expected.foreach { case (algo, n) =>
       lib.setAlgorithm(algo)
       assert(jobs(lib.search("spark join stream", k = 5)) == n, s"search via $algo")
@@ -80,6 +88,21 @@ class SearchJobsSpec extends AnyFunSuite {
       "vec_id", "embedding", "quant", 5)
     assert(quantized.columns.toSeq == Seq("vec_id", "score"))
     assert(quantized.collect().isEmpty)
+  }
+
+  test("a data-backed query frame resolves in one job") {
+    val session = spark
+    import session.implicits._
+    val emb = Tables.load(spark, SparkTestSession.sfDir, "embeddings")
+    val vecs = emb.select(col("embedding")).limit(16).collect()
+      .map(_.getSeq[Float](0)).toSeq
+    // an RDD-backed frame over 8 partitions whose one match sits in the
+    // last: a take would widen over several jobs to reach it
+    val query = spark.sparkContext.parallelize(vecs.zipWithIndex, 8)
+      .toDF("qvec", "i").filter(col("i") === vecs.size - 1).select(col("qvec"))
+    // one job resolves the query, one runs the scan
+    assert(JobCount(spark)(VectorSearch.knnFlat(emb, query, "vec_id", "embedding", 5,
+      "cosine").collect()) == 2)
   }
 
   test("one addDocuments commits exactly one store file per source") {

@@ -219,7 +219,7 @@ class VectorLibrarySpec extends AnyFunSuite {
         .count(_.getName.endsWith(".parquet"))
     }
     val filesBefore = parquetFiles()
-    lib.compact(numPartitions = 1)
+    lib.compact()
     // the rewrite is history-preserving: displaced files stay on disk
     // for the restore/epoch horizon until the explicit truncate-
     // history switch reclaims them (immediately — retainNone must not
@@ -781,9 +781,9 @@ class VectorLibrarySpec extends AnyFunSuite {
     assert(before.map(_.getLong(1)).sum >= 2, "two appends must leave >= 2 files")
     assert(before.exists(_.getBoolean(5)), "fragmented source not flagged")
     val total = before.map(_.getLong(2)).sum
-    lib.compact(1)
+    lib.compact()
     val after = lib.storeFileStats().collect()
-    assert(after.map(_.getLong(1)).max == 1, "compact(1) must leave 1 file/source")
+    assert(after.map(_.getLong(1)).max == 1, "compact must leave 1 file/source")
     assert(after.forall(!_.getBoolean(5)), "compacted store still flagged")
     // bytes are conserved within parquet re-encoding slack
     assert(after.map(_.getLong(2)).sum > 0 && total > 0)
